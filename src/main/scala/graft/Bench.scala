@@ -239,27 +239,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val (quietVerdict, quietWaitSec) = quietGate()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the full machine (brief: local[32]) when the driver
-    // doesn't pin a core count
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Heap-proofing (round-8 finding, SCALE.md "heap contamination"):
-      // Spark frees broadcast/shuffle/checkpoint state via weak references,
-      // so cleanup only happens when the driver GCs. At a huge heap
-      // (SPARK_DRIVER_MEM >> 8g) full GCs are rare, state from hundreds of
-      // prior query runs accumulates, and late-alphabet queries slow 10-100x.
-      // periodicGC forces a driver GC on a wall-clock cadence so ContextCleaner
-      // keeps draining regardless of heap size (default is 30min — far longer
-      // than this whole bench).
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     // the load_before stamp must reflect the HOST's state, so it is
     // sampled before this process does any real work (the calib probe
     // below alone pushes the 1-min average up by its own parallelism)
@@ -447,5 +427,23 @@ object Bench {
       println(compact); System.out.flush()
     }))
     spark.stop()
+  }
+
+  /** The engine session plus the bench's one extra key.
+    *
+    * Heap-proofing (round-8 finding, SCALE.md "heap contamination"):
+    * Spark frees broadcast/shuffle/checkpoint state via weak references,
+    * so cleanup only happens when the driver GCs. At a huge heap
+    * (SPARK_DRIVER_MEM >> 8g) full GCs are rare, state from hundreds of
+    * prior query runs accumulates, and late-alphabet queries slow 10-100x.
+    * periodicGC forces a driver GC on a wall-clock cadence so ContextCleaner
+    * keeps draining regardless of heap size (default is 30min — far longer
+    * than this whole bench). */
+  def session(): SparkSession = {
+    val spark = graft.core.GraftSession.builder()
+      .config("spark.cleaner.periodicGC.interval", "30s")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -100,8 +100,9 @@ object Fanout {
   }
 
   /** Bytes of input per fan-out task. CPU-dense text/vector kernels here
-    * process raw input at single-digit MB/s/core (FanoutProbe: the 1.1 MB
-    * near-dup corpus costs ~1.2 s of single-core minhash), so ~64 KB
+    * process raw input at single-digit MB/s/core (the 1.1 MB near-dup
+    * corpus costs ~1.2 s of single-core minhash; removed probe, last at
+    * commit 58fcdb8), so ~64 KB
     * gives each task ~50–100 ms of real work — comfortably above the
     * ~10–30 ms per-task fixed cost, where a blanket fan-out to the full
     * core count left light gates paying more overhead than they

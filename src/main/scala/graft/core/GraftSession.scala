@@ -7,8 +7,10 @@ import org.apache.spark.sql.SparkSession
   * The reference runs PySpark 3.5.5 on a 3-worker standalone cluster with
   * dynamicAllocation (reference `docker-compose.yml:129-184`,
   * `dags/vcapital_staging/tasks/extract_db.py:18-31`). We target Spark 4.x
-  * local[32] for tests while keeping every setting meaningful on a real
-  * multi-executor cluster:
+  * local[cpus] while keeping every setting meaningful on a real
+  * multi-executor cluster. This is the only place a session is configured:
+  * entry points that need one more key (Bench's periodic GC, Verify's AQE
+  * toggle) add it on top of [[builder]].
   *
   *  - AQE on: runtime shuffle-partition coalescing + skew-join splitting are
   *    what make a fixed `shuffle.partitions` safe at 1000x the data.
@@ -18,12 +20,14 @@ import org.apache.spark.sql.SparkSession
   *    `timestamp without time zone` columns and the DuckDB oracle.
   */
 object GraftSession {
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Local core count: `SPARK_GRAFT_CPUS`, else every available core. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
 
-  def builder(master: String = s"local[$cpus]"): SparkSession.Builder =
-    SparkSession
-      .builder()
-      .master(master)
+  /** Master `local[cpus]` with `cpus` shuffle partitions. */
+  def builder(cpus: String = GraftSession.cpus): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")

@@ -19,11 +19,15 @@ import org.apache.spark.sql.types._
   * array is materialized. This is preference order (b) from the build
   * brief: a custom Expression where built-ins compose wastefully, well
   * short of a custom physical operator.
+  *
+  * Like the composition, the result is NULL when the lengths differ or an
+  * element is NULL ([[VectorGuard]]).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
   override def prettyName: String = "graft_cosine"
 
   override def checkInputDataTypes(): TypeCheckResult = {
@@ -40,7 +44,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    if (!VectorGuard.valid(x, y, left, right)) return null
+    val n = x.numElements()
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
       val xi = x.getDouble(i); val yi = y.getDouble(i)
@@ -56,16 +61,19 @@ case class CosineSimilarity(left: Expression, right: Expression)
       val n = ctx.freshName("n"); val i = ctx.freshName("i")
       val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
       val nb = ctx.freshName("nb"); val d = ctx.freshName("d")
+      VectorGuard.genCode(ctx, ev, a, b, left, right) +
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double xi = $a.getDouble($i);
-         |  double yi = $b.getDouble($i);
-         |  $dot += xi * yi; $na += xi * xi; $nb += yi * yi;
+         |if (!${ev.isNull}) {
+         |  int $n = $a.numElements();
+         |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    double xi = $a.getDouble($i);
+         |    double yi = $b.getDouble($i);
+         |    $dot += xi * yi; $na += xi * xi; $nb += yi * yi;
+         |  }
+         |  double $d = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
+         |  ${ev.value} = $d > 0 ? $dot / $d : 0.0;
          |}
-         |double $d = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |${ev.value} = $d > 0 ? $dot / $d : 0.0;
        """.stripMargin
     })
 
@@ -92,12 +100,14 @@ object CosineSimilarity {
   * ([[graft.operators.Similarity.cosinePrenormed]] — the per-candidate-
   * pair hot loop of every banded ANN verify stage). Same ascending-index
   * IEEE summation as the `aggregate(zip_with(...))` Column form —
-  * bit-identical results (spec-pinned, CosineExprSpec) — with no
-  * intermediate product array and full codegen. */
+  * bit-identical results, NULL on ragged or NULL-element input included
+  * (spec-pinned, CosineExprSpec) — with no intermediate product array and
+  * full codegen. */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
   override def prettyName: String = "graft_dot"
 
   override def checkInputDataTypes(): TypeCheckResult = {
@@ -114,7 +124,8 @@ case class DotProduct(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    if (!VectorGuard.valid(x, y, left, right)) return null
+    val n = x.numElements()
     var dot = 0.0; var i = 0
     while (i < n) { dot += x.getDouble(i) * y.getDouble(i); i += 1 }
     dot
@@ -124,13 +135,16 @@ case class DotProduct(left: Expression, right: Expression)
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val n = ctx.freshName("n"); val i = ctx.freshName("i")
       val dot = ctx.freshName("dot")
+      VectorGuard.genCode(ctx, ev, a, b, left, right) +
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $dot += $a.getDouble($i) * $b.getDouble($i);
+         |if (!${ev.isNull}) {
+         |  int $n = $a.numElements();
+         |  double $dot = 0.0;
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    $dot += $a.getDouble($i) * $b.getDouble($i);
+         |  }
+         |  ${ev.value} = $dot;
          |}
-         |${ev.value} = $dot;
        """.stripMargin
     })
 
@@ -147,5 +161,41 @@ object DotProduct {
   def column(spark: SparkSession, a: Column, b: Column): Column = {
     register(spark)
     call_function("graft_dot", a, b)
+  }
+}
+
+/** Input guard shared by the vector kernels, matching the `zip_with`
+  * composition they replace: `zip_with` pads the shorter array with NULL
+  * and NULL propagates through the fold, so ragged input or a NULL element
+  * yields NULL. The element scan is emitted only for an input whose
+  * `ArrayType.containsNull` is true. */
+private[expressions] object VectorGuard {
+  private def mayHoldNull(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].containsNull
+
+  def valid(x: ArrayData, y: ArrayData, left: Expression, right: Expression): Boolean = {
+    val n = x.numElements()
+    if (n != y.numElements()) return false
+    def clean(v: ArrayData, e: Expression): Boolean =
+      !mayHoldNull(e) || (0 until n).forall(i => !v.isNullAt(i))
+    clean(x, left) && clean(y, right)
+  }
+
+  /** Sets `ev.isNull` to true on ragged or NULL-element input. */
+  def genCode(ctx: CodegenContext, ev: ExprCode, a: String, b: String,
+              left: Expression, right: Expression): String = {
+    val i = ctx.freshName("i")
+    val nulls = Seq(a -> left, b -> right).collect {
+      case (v, e) if mayHoldNull(e) => s"$v.isNullAt($i)"
+    }
+    val scan =
+      if (nulls.isEmpty) ""
+      else s"""
+         |for (int $i = 0; !${ev.isNull} && $i < $a.numElements(); $i++) {
+         |  ${ev.isNull} = ${nulls.mkString(" || ")};
+         |}""".stripMargin
+    s"""
+       |${ev.isNull} = $a.numElements() != $b.numElements();$scan
+     """.stripMargin
   }
 }

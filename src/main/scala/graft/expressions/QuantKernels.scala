@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * expression nodes at any C), and scoring is a tight primitive loop —
   * where the literal-folded Column arms grow O(C·dim) nodes and fall
   * out of codegen past a few dozen centroids (measured:
-  * `Ivf.ExpressionAssignMaxC`'s scaladoc; tools/QuantParamProbe pins
-  * the cliff at production C).
+  * `Ivf.ExpressionAssignMaxC`'s scaladoc; a removed probe, last at
+  * commit 58fcdb8, pinned the cliff at production C).
   *
   * Bit-faithfulness contract (spec-pinned against the literal arms):
   * dots and squared distances fold ascending-index exactly like

@@ -238,7 +238,8 @@ object Dedup {
       }
 
   /** Min-label iteration budget before [[clusters]] (deep = false)
-    * falls back to the star path. Pinned from tools/ChainProbe (10⁶
+    * falls back to the star path. Pinned by a removed probe, last at
+    * commit 58fcdb8 (10⁶
     * edges, quiet box): min-label wins at diameter ≤ 7 (4.4–7.6 s vs
     * star's 6.6–10.5 s — star pays ~13–15 s of fixed O(log n)-round
     * cost at this scale regardless of diameter), star wins from
@@ -768,7 +769,8 @@ object Dedup {
     * Measured alternative (round 4, sf0.1 / 20k docs): a pure-projection
     * form — grams32 materialized, then 128 `array_min(transform(...))`
     * lanes with no explode/aggregate/exchange — is 2.1× SLOWER (3.9 s vs
-    * 1.8 s, X3Probe): per-lane `transform` allocates an array per row per
+    * 1.8 s; removed probe, last at commit 58fcdb8): per-lane `transform`
+    * allocates an array per row per
     * lane, while this aggregator's while-loop updates one buffer in
     * place. The explode+aggregate shape also stays map-side combinable,
     * which the projection form can't improve on anyway (it has no
@@ -958,10 +960,6 @@ object Dedup {
       sigGramsFrame(right, idCol, textCol, n, bands * rowsPerBand)
         .localCheckpoint(false),
       bands, rowsPerBand, threshold, maxBucketSize)
-
-  /** The banded-minhash UDAF as a reusable column function (probe access). */
-  private[graft] def minhashAgg(numHashes: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udaf(new MinhashArrayAgg(numHashes, hashParams(numHashes).toArray))
 
   /** The (id, sig, grams) signature frame both near-dup families build
     * on — one tokenize+shingle pass, one map-side-combinable aggregate. */

@@ -92,10 +92,10 @@ object Ivf {
     * [[graft.expressions.NearestCentroids]] kernel (centroid matrix as
     * ONE literal, per-row scoring loop). The kernel owns EVERY centroid
     * count since r21: it was always required at SemDeDup-scale C
-    * (10⁴–10⁵, where the literal tree stops analyzing/codegenning —
-    * tools/QuantParamProbe), and tools/QuantArmProbe measured it 1.7×
-    * faster than the literal tree even at the gates' c = 16 (0.23 →
-    * 0.14 s over the sf0.1 corpus) while keeping the serialized plan
+    * (10⁴–10⁵, where the literal tree stops analyzing/codegenning), and
+    * it measured 1.7× faster than the literal tree even at the gates'
+    * c = 16 (0.23 → 0.14 s over the sf0.1 corpus; removed probes, last
+    * at commit 58fcdb8) while keeping the serialized plan
     * O(1) nodes (the literal trees were the 1.2–1.7 MiB "broadcasting
     * large task binary" warnings in the y5/y6 bench tail). The literal
     * arm ([[nearestCidsLiteral]]) remains the SQL-expressible reference

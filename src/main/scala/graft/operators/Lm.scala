@@ -236,12 +236,11 @@ object Lm {
     *     blocks, so storage is 2 frames regardless of round count.
     * After round 1 no full pair recount ever runs, and the affected
     * fraction shrinks as merges get rarer — the property that makes
-    * 10k-round training feasible (measured: tools/BpeProbe, SCALE.md).
+    * 10k-round training feasible (measured: SCALE.md, removed probe,
+    * last at commit 58fcdb8).
     * The final round skips steps 2-3 entirely (its state has no
     * consumer). For multi-hour production runs prefer `checkpoint()`
     * to reliable storage (executor loss invalidates local checkpoints).
-    * `onRound` is a probe hook (round, phase, nanos) — a no-op by
-    * default, used by tools/BpeProbe to publish per-phase cost.
     *
     * TWO ARMS, chosen by the EXPLICIT `sampled` flag (r15 advice: the
     * earlier rounds>64 auto-dispatch silently switched semantics —
@@ -272,7 +271,7 @@ object Lm {
           "size) — for large vocabularies pass sampled = true (bounded " +
           "deterministic sample, driver-local merge loop; identical " +
           "whenever the sample covers the corpus)")
-      bpeMergesDistributed(df, idCol, textCol, rounds, joiner, (_, _, _) => ())
+      bpeMergesDistributed(df, idCol, textCol, rounds, joiner)
     }
 
   private lazy val logger = org.slf4j.LoggerFactory.getLogger("graft.operators.Lm")
@@ -280,9 +279,9 @@ object Lm {
   /** Advisory round count above which the exact arm of [[bpeMerges]]
     * logs a latency warning (it is O(rounds) SEQUENTIAL Spark jobs —
     * one top-1 collect per round, flat ~0.3-0.4 s/round at any corpus
-    * size, tools/BpeProbe — so a production 30k-50k-merge vocabulary
-    * would be hours of driver round-trips; tools/BpeTrainProbe shows
-    * the sampled arm's crossover is round-count-driven, not
+    * size (removed probe, last at commit 58fcdb8) — so a production
+    * 30k-50k-merge vocabulary would be hours of driver round-trips; a
+    * second removed probe (same commit) showed the sampled arm's crossover is round-count-driven, not
     * data-driven). Purely advisory since r16: arm choice is the
     * caller's explicit `sampled` flag, never an auto-dispatch. 64
     * keeps every oracle-mirrored gate (3-12 rounds) far below the
@@ -299,8 +298,7 @@ object Lm {
 
   private[graft] def bpeMergesDistributed(
       df: DataFrame, idCol: String, textCol: String,
-      rounds: Int, joiner: String,
-      onRound: (Int, String, Long) => Unit): DataFrame = {
+      rounds: Int, joiner: String): DataFrame = {
     require(rounds > 0, s"bpeMerges: rounds must be positive, got $rounds")
     val spark = df.sparkSession
     val sc = spark.sparkContext
@@ -316,28 +314,24 @@ object Lm {
     }
     def drop(ids: Set[Int]): Unit =
       ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    def timed[A](r: Int, phase: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val a = body
-      onRound(r, phase, System.nanoTime() - t0); a
-    }
     // corpus state: ONE space-padded joined-token string per row — the
     // domain applyMergeStr rewrites and `contains` probes directly.
     // Round-trips exactly: tokens are whitespace-split and non-empty.
-    var (cur, curIds) = timed(0, "tokenize")(checkpointTracked(
+    var (cur, curIds) = checkpointTracked(
       df.select(concat(lit(" "),
-        array_join(TextAnalysis.tokens(col(textCol)), " "), lit(" ")).as("s"))))
+        array_join(TextAnalysis.tokens(col(textCol)), " "), lit(" ")).as("s")))
     // the ONE full pair count (an empty/1-token row pads to a string
     // that trims+splits to a single token — no pairs, by the m-clamp)
     val toksOf = (s: Column) => split(trim(s), " ")
-    var (counts, countIds) = timed(0, "initial_count")(checkpointTracked(
+    var (counts, countIds) = checkpointTracked(
       cur.select(explode(pairsFromToks(toksOf(col("s")))).as("pair"))
-        .groupBy(col("pair")).agg(count(lit(1)).as("n"))))
+        .groupBy(col("pair")).agg(count(lit(1)).as("n")))
     val picks = scala.collection.mutable.ArrayBuffer[(Int, String, Long)]()
     var r = 1
     var exhausted = false
     while (r <= rounds && !exhausted) {
-      val top = timed(r, "top1")(
-        counts.orderBy(col("n").desc, col("pair").asc).limit(1).collect())
+      val top =
+        counts.orderBy(col("n").desc, col("pair").asc).limit(1).collect()
       if (top.isEmpty) exhausted = true // corpus has no adjacent pairs left
       else {
         val pair = top(0).getString(0)
@@ -361,13 +355,13 @@ object Lm {
                 p => struct(p.as("pair"), lit(1L).as("w"))))).as("pw"))
             .groupBy(col("pw.pair").as("pair"))
             .agg(sum(col("pw.w")).as("n"))
-          val (nc, ncIds) = timed(r, "delta_counts")(checkpointTracked(
+          val (nc, ncIds) = checkpointTracked(
             counts.unionByName(delta)
               .groupBy(col("pair")).agg(sum(col("n")).as("n"))
-              .filter(col("n") > 0)))
+              .filter(col("n") > 0))
           drop(countIds); counts = nc; countIds = ncIds
-          val (nr, nrIds) = timed(r, "rewrite")(checkpointTracked(
-            cur.select(when(hit, rewritten).otherwise(col("s")).as("s"))))
+          val (nr, nrIds) = checkpointTracked(
+            cur.select(when(hit, rewritten).otherwise(col("s")).as("s")))
           drop(curIds); cur = nr; curIds = nrIds
         }
       }
@@ -394,8 +388,8 @@ object Lm {
     *  2. the merge loop runs driver-local with delta-maintained pair
     *     counts, a pair→docs occurrence index, and a lazy-deletion
     *     max-heap — per round O(affected docs × doc length), no Spark
-    *     job at all (tools/BpeTrainProbe: ~10³-10⁴ rounds/s vs the
-    *     distributed arm's ~3 rounds/s).
+    *     job at all (~10³-10⁴ rounds/s vs the distributed arm's ~3
+    *     rounds/s; removed probe, last at commit 58fcdb8).
     *
     * Semantics per round are EXACTLY the distributed arm's: count every
     * adjacent pair occurrence (overlapping included), adopt the single
@@ -428,8 +422,7 @@ object Lm {
   }
 
   /** The driver-local merge loop behind [[bpeMergesSampled]] — exposed
-    * package-private so specs and tools/BpeTrainProbe can drive it on
-    * in-memory corpora. */
+    * package-private so specs can drive it on in-memory corpora. */
   private[graft] def trainLocal(docs: Array[Array[String]], rounds: Int,
                                 joiner: String): Seq[(Int, String, Long)] = {
     import java.nio.charset.StandardCharsets.UTF_8
@@ -588,17 +581,19 @@ object Lm {
     *    expression — the merge table rides as ONE array literal into a
     *    per-row kernel, so plan size is O(1) in the vocabulary where
     *    the regexp chain grows one nested node per merge and dies of
-    *    analyzer stack depth in the low thousands (tools/BpeScaleProbe
-    *    measured the break; production vocabularies are 10k–50k).
+    *    analyzer stack depth in the low thousands (measured by a removed
+    *    probe, last at commit 58fcdb8; production vocabularies are
+    *    10k–50k).
     *
     * Either arm: no UDF, no shuffle, no state — encoding 100 TB is a
     * pure map over the corpus scan, which is the whole point of running
     * tokenization inside the engine. */
   /** Above this merge count [[bpeEncode]] switches from the literal
     * regexp chain to the [[graft.expressions.BpeEncode]] kernel
-    * expression. tools/BpeScaleProbe: the chain's nested plan hits
-    * analyzer stack limits in the low thousands of merges and its
-    * per-row cost is a full string scan per merge; 128 keeps every
+    * expression. Measured (removed probe, last at commit 58fcdb8): the
+    * chain's nested plan hits analyzer stack limits in the low thousands
+    * of merges and its per-row cost is a full string scan per merge;
+    * 128 keeps every
     * oracle-mirrored gate (3–50 merges) on the SQL-expressible arm with
     * wide margin below the cliff. */
   val LiteralEncodeMaxMerges = 128
@@ -610,11 +605,9 @@ object Lm {
       bpeEncodeLiteral(df, idCol, textCol, merges, joiner)
     else bpeEncodeKernel(df, idCol, textCol, merges, joiner)
 
-  /** Literal arm: one nested regexp_replace per merge, one projection.
-    * Exposed package-private so tools/BpeScaleProbe can measure where
-    * this plan shape breaks; production entry is the dispatching
-    * [[bpeEncode]]. */
-  private[graft] def bpeEncodeLiteral(df: DataFrame, idCol: String,
+  /** Literal arm: one nested regexp_replace per merge, one projection;
+    * entry is the dispatching [[bpeEncode]]. */
+  private def bpeEncodeLiteral(df: DataFrame, idCol: String,
                                       textCol: String,
                                       merges: Seq[(String, String)],
                                       joiner: String = "~"): DataFrame = {

@@ -29,7 +29,8 @@ object Multimodal {
   /** Per-partition cached WAV reader (one instance per partition, like
     * the writer caches): AudioSystem.getAudioInputStream re-scans the
     * AudioFileReader SPI registry per call — measured 23x the actual
-    * parse+read work (626ms vs 27ms / 20k clips, tools/WavPerfProbe).
+    * parse+read work (626ms vs 27ms / 20k clips; removed probe, last at
+    * commit 58fcdb8).
     * The first payload resolves the provider; a payload the cached
     * reader rejects falls back to the full AudioSystem path (and
     * re-caches from it), so mixed-container inputs stay correct. */
@@ -185,8 +186,8 @@ object Multimodal {
   /** Shared lossless gray encoder: a `w`×`h` TYPE_BYTE_GRAY raster from
     * the first `w*h` payload bytes, written through a per-partition
     * CACHED ImageWriter (`ImageIO.write` re-scans the writer registry
-    * per call — same flat per-row SPI tax the WAV kernels measured, see
-    * tools/WavPerfProbe). Output column is named after the format. */
+    * per call — same flat per-row SPI tax the WAV kernels measured).
+    * Output column is named after the format. */
   private def encodeGrayLossless(media: DataFrame, format: String,
                                  w: Int, h: Int): DataFrame = {
     require(w > 0 && h > 0, s"encodeGray($format): w=$w h=$h")
@@ -357,8 +358,9 @@ object Multimodal {
           /*signed=*/ true, /*bigEndian=*/ false)
         // Provider cached ONCE per partition: AudioSystem.write re-scans
         // the AudioFileWriter SPI registry on EVERY call — measured 12x
-        // the actual container-write work (713ms vs 57ms / 20k clips,
-        // tools/WavPerfProbe), and the dominant flat per-row term behind
+        // the actual container-write work (713ms vs 57ms / 20k clips;
+        // removed probe, last at commit 58fcdb8), and the dominant flat
+        // per-row term behind
         // m6's 8.1x sf1 ratio. Falls back to AudioSystem if no provider
         // is visible to this classloader.
         import scala.jdk.CollectionConverters._

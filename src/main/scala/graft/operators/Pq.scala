@@ -91,9 +91,9 @@ object Pq {
     * Always the [[graft.expressions.PqCodes]] kernel (codebooks as ONE
     * literal, O(1) plan nodes) since r21: the kernel was always required
     * at production ks = 256–4096 (the literal tree stops
-    * analyzing/codegenning — tools/QuantParamProbe), and
-    * tools/QuantArmProbe measured it 5.4× faster than the literal tree
-    * even at the gates' ks = 16 (0.86 → 0.16 s over the sf0.1 corpus);
+    * analyzing/codegenning), and it measured 5.4× faster than the
+    * literal tree even at the gates' ks = 16 (0.86 → 0.16 s over the
+    * sf0.1 corpus; removed probes, last at commit 58fcdb8);
     * the literal trees were also the 1.2–1.7 MiB "broadcasting large
     * task binary" warnings in the y5/y6 bench tail. The literal arm
     * stays as the SQL-expressible reference, spec-pinned bit-identical

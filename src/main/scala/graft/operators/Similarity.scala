@@ -42,10 +42,9 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dotNative(a, a))
 
-  def cosine(a: Column, b: Column): Column = {
-    val d = norm(a) * norm(b)
-    when(d > 0, dotNative(a, b) / d).otherwise(lit(0.0))
-  }
+  /** 0.0 when a norm is 0; NULL on ragged or NULL-element input (the
+    * dot is NULL there, so the zero guard must not turn it into 0.0). */
+  def cosine(a: Column, b: Column): Column = cosinePrenormed(a, b, norm(a), norm(b))
 
   /** Cosine from PRECOMPUTED norms — bit-identical to [[cosine]] (same
     * expressions, same operation order), but the norms are computed once
@@ -55,7 +54,8 @@ object Similarity {
     * the attach join as a single extra double per row. */
   def cosinePrenormed(a: Column, b: Column, na: Column, nb: Column): Column = {
     val d = na * nb
-    when(d > 0, dotNative(a, b) / d).otherwise(lit(0.0))
+    val dot = dotNative(a, b)
+    when(d > 0, dot / d).when(dot.isNotNull, lit(0.0))
   }
 
   /** Deterministic random hyperplanes: `planes` rows of `dim` N(0,1)
@@ -117,8 +117,8 @@ object Similarity {
     * (planes as ONE literal, codegen'd sign-bit loop): the literal
     * per-plane `zip_with`/`aggregate` trees evaluated interpreted and
     * grew O(tables·planes·dim) plan nodes — the same pathology the
-    * PQ/IVF kernels fixed, measured 5.4×/1.7× there
-    * (tools/QuantArmProbe) and a y2/y3/x5 banding-stage cost here. The
+    * PQ/IVF kernels fixed, measured 5.4×/1.7× there (removed probe,
+    * last at commit 58fcdb8) and a y2/y3/x5 banding-stage cost here. The
     * literal arm ([[hyperplaneSignatureLiteral]]) stays as the
     * SQL-expressible reference, spec-pinned bit-identical
     * (SimilaritySpec). */

@@ -184,7 +184,8 @@ object Warehouse {
   /** bridge_company_people (`init_dwh.sql:63-73`): relationships resolved
     * to surrogate-key pairs; the all-string staging.relationships columns
     * (`init_stg.sql:158-169`) are typed here — start/end become yyyyMMdd
-    * int date keys, blank titles null out. */
+    * int date keys, blank titles and blank dates null out (a non-blank
+    * unparseable date still fails under ANSI `to_date`). */
   def bridgeCompanyPeople(relationships: DataFrame, dimCompany: DataFrame,
                           dimPeople: DataFrame,
                           broadcastDims: Boolean = true): DataFrame = {
@@ -197,8 +198,10 @@ object Warehouse {
         col("sk_company_id"), col("sk_people_id"),
         Cleaning.nullIfBlank(trim(col("title"))).as("title"),
         Cleaning.nullIfBlank(trim(col("is_past"))).as("is_past"),
-        Cleaning.dateKey(to_date(col("start_at"))).as("relationship_start_at"),
-        Cleaning.dateKey(to_date(col("end_at"))).as("relationship_end_at"))
+        Cleaning.dateKey(to_date(Cleaning.nullIfBlank(trim(col("start_at")))))
+          .as("relationship_start_at"),
+        Cleaning.dateKey(to_date(Cleaning.nullIfBlank(trim(col("end_at")))))
+          .as("relationship_end_at"))
   }
 
   /** fct_investments (extract_transform.py:237-346): company + fund key

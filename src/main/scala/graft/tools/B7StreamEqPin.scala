@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.streaming.EventsStream
@@ -35,16 +34,7 @@ object B7StreamEqPin {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("testdata/sf1")
     val outJson = if (args.length > 1) args(1) else "B7_STREAM_EQ_sf1.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
 
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     // All three scratch dirs (source files, staging copy, checkpoint) are

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Arm-equivalence pin for BPE training at scale factors the v3/v6
   * DuckDB oracle cannot reach (allocator class): run the EXACT
@@ -18,22 +17,14 @@ object BpeArmPin {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/testdata/sf1")
     val rounds = args.lift(1).map(_.toInt).getOrElse(12)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
     val docs = graft.Tables.documents(spark, sfDir)
     def collectPicks(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
         .sortBy(_._1).toSeq
     val t0 = System.nanoTime()
     val dist = collectPicks(graft.operators.Lm.bpeMergesDistributed(
-      docs, "doc_id", "text", rounds, "~", (_, _, _) => ()))
+      docs, "doc_id", "text", rounds, "~"))
     val tDist = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
     val samp = collectPicks(graft.operators.Lm.bpeMergesSampled(

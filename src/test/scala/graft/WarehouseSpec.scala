@@ -46,6 +46,31 @@ class WarehouseSpec extends SparkSpec {
     assert(got(1).getAs[String]("fund_description") == null)
   }
 
+  test("bridgeCompanyPeople: blank dates -> null keys, junk dates fail") {
+    val dimCompany = Warehouse.withDenseKey(
+      Seq("c:1").toDF("nk_company_id"), "sk_company_id", "nk_company_id")
+    val dimPeople = Warehouse.withDenseKey(
+      Seq("p:1", "p:2", "p:3").toDF("nk_people_id"), "sk_people_id", "nk_people_id")
+    def rels(rows: (String, String, String)*) =
+      rows.toDF("person_object_id", "start_at", "end_at")
+        .withColumn("relationship_object_id", lit("c:1"))
+        .withColumn("title", lit(" CEO ")).withColumn("is_past", lit("false"))
+    val got = Warehouse.bridgeCompanyPeople(rels(
+        ("p:1", "2008-03-01", ""),
+        ("p:2", "", "  "),
+        ("p:3", "  ", "2010-12-31")),
+      dimCompany, dimPeople)
+      .orderBy("sk_people_id").collect()
+      .map(r => (Option(r.getAs[Integer]("relationship_start_at")),
+        Option(r.getAs[Integer]("relationship_end_at"))))
+    assert(got.toSeq == Seq(
+      (Some(20080301), None), (None, None), (None, Some(20101231))))
+    intercept[Exception] {
+      Warehouse.bridgeCompanyPeople(rels(("p:1", "2008-13-45", "")),
+        dimCompany, dimPeople).collect()
+    }
+  }
+
   test("fctInvestments: orphan FKs drop, missing round -> nulls, date validity") {
     val dimCompany = Warehouse.withDenseKey(
       Seq(("c:1", "company"), ("c:2", "company")).toDF("nk_company_id", "entity_type"),

@@ -13,5 +13,4 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
 done
 # GRAFT_JAVA_OPTS: extra JVM flags (GC logging, collector choice) for experiments
 exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-8g} ${GRAFT_JAVA_OPTS:-} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
